@@ -115,6 +115,24 @@ def test_subscription_uses_compiled_path(cloudevents):
     )
 
 
+def test_subscription_logs_fallback_reason(cloudevents, caplog):
+    """The interpreter fallback names its reason in the log; the
+    compiled path logs nothing."""
+    unfold = Subscription.from_spec(
+        {"transformer": {"pipeline": [["UNFOLD_ARRAY", "$.data.arr", "$.data.item"]]}}
+    )
+    static = Subscription.from_spec(
+        {"transformer": {"pipeline": [["MATH_MUL", "$.data.value", "$.data.value", 2]]}}
+    )
+    with caplog.at_level("DEBUG", logger="vanus_spark.subscription"):
+        static.apply(cloudevents, data_schema=DATA_SCHEMA)
+        assert caplog.records == []
+        unfold.apply(cloudevents, data_schema=DATA_SCHEMA)
+    [rec] = caplog.records
+    assert rec.levelname == "INFO"
+    assert "interpreter" in rec.getMessage() and "UNFOLD_ARRAY" in rec.getMessage()
+
+
 def test_subscription_falls_back_for_template(cloudevents):
     sub = Subscription.from_spec(
         {"transformer": {"pipeline": [["MATH_MUL", "$.data.value", "$.data.value", 2]],

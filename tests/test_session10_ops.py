@@ -6,9 +6,11 @@ registry-level queries are gated by the DuckDB oracles
 
 from __future__ import annotations
 
+import datetime as dt
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_ks_two_sample_hand_computed(spark):
@@ -335,6 +337,25 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     assert [p[1] for p in picks] == [1, 3, 2]
     assert picks[0][3] == round(0.75 * picks[0][2], 6)
     assert all(p[2] is not None for p in picks)
+
+
+@pytest.mark.parametrize(
+    "id_type, ids",
+    [
+        ("string", ["o'brien\x01", 'say "hi"', "back\\slash"]),
+        ("date", [dt.date(2024, 1, 1), dt.date(2024, 1, 2), dt.date(2024, 1, 3)]),
+    ],
+)
+def test_mmr_ids_need_no_sql_quoting(spark, id_type, ids):
+    """Chosen ids never enter the SQL text: ids with quotes or
+    control characters, and DATE ids, pick the same order as the
+    integer-id case above."""
+    from vanus_spark.llm.similarity import mmr_select
+
+    vecs = [[0.9, 0.436, 0.0], [0.85, 0.527, 0.0], [0.8, 0.0, 0.6]]
+    df = spark.createDataFrame(list(zip(ids, vecs)), f"vec_id {id_type}, embedding array<double>")
+    picks = mmr_select(df, [1.0, 0.0, 0.0], k=3, lam=0.75)
+    assert [p[1] for p in picks] == [ids[0], ids[2], ids[1]]
 
 
 def test_mann_kendall_hand_computed(spark):

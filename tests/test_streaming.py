@@ -684,8 +684,8 @@ def test_apply_in_pandas_with_state_running_stats(spark, events, tmp_path):
 
 
 def test_run_stream_metrics(spark, tmp_path):
-    """One tagged-union job per tick feeds the metrics table:
-    delivered / newly-dead / parked counts per epoch."""
+    """The per-tick counts feed the metrics table: delivered /
+    newly-dead / parked counts per epoch."""
     src = str(tmp_path / "src")
     rows = [_row(i) for i in range(6)] + [_row(100, typ="purchase")]
     df = _envelope(spark, rows)

@@ -950,18 +950,20 @@ def mmr_select(
             f"{_dot_sql(a, b)} / ({_l2_norm_sql(a)} * {_l2_norm_sql(b)})"
         )
 
+    # chosen rows are excluded by a surrogate row id pinned by the
+    # checkpoint, so the NOT IN list holds only long literals whatever
+    # the id's type or content (quotes, DATE, DECIMAL, NaN, NULL)
     base = emb.selectExpr(
         f"`{id_col}`",
         f"CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS _v",
+        "monotonically_increasing_id() AS _rid",
     ).withColumn("_qsim", F.expr(_cos_sql("_v", _vec_sql(query_vec))))
     base = base.localCheckpoint(eager=False)
     chosen: list[tuple] = []
     out: list[tuple] = []
     for i in range(k):
         cands = (
-            base.where(
-                f"`{id_col}` NOT IN ({','.join(repr(c[0]) for c in chosen)})"
-            )
+            base.where(f"_rid NOT IN ({','.join(str(c[0]) for c in chosen)})")
             if chosen
             else base
         )
@@ -976,6 +978,7 @@ def mmr_select(
         pick = (
             cands.selectExpr(
                 f"`{id_col}`",
+                "_rid",
                 "_v",
                 "round(_qsim, 6) AS _qsim_r",
                 f"{score} AS _score",
@@ -985,6 +988,6 @@ def mmr_select(
             .limit(1)
             .collect()[0]
         )
-        chosen.append((pick[id_col], list(pick["_v"])))
+        chosen.append((pick["_rid"], list(pick["_v"])))
         out.append((i + 1, pick[id_col], pick["_qsim_r"], pick["_score_r"]))
     return out

@@ -21,26 +21,42 @@ The loop is a pure function of (batch, pending, batch_time), so tests
 replay deterministic batches with logical timestamps (no wall clock),
 exactly like the reference's own unit strategy for the wheel.
 
-At scale: pending is small relative to throughput (only failures and
-delays), so the union is cheap; delivery parallelism = input
-partitions; the only shuffle is the offset aggregation (tiny,
-partial-agg). For exactly-once bookkeeping the delivered/dead tables
-would be Delta/Iceberg appends keyed by (eventlog, offset) — plain
-parquet appends here since those jars aren't in the test image.
+How a tick runs: the transformed batch is materialized once and the
+send results once (``localCheckpoint``, never ``cache`` — a recompute
+of an evicted cache block would re-send events). Everything else the
+tick produces (delivered, retries, dead letters, delayed, the new
+pending table) is a narrow filter or union over those two frames and
+the previous pending table, so no action re-runs the interpreter or
+the sink. Pending and dead are coalesced to at most
+``defaultParallelism`` partitions before they are checkpointed, so the
+state's width stays flat however many ticks have run; the tick's counts
+are observed while the frames materialize (no extra count job, no
+re-scan of the batch). A tick's checkpoints are released when the next
+tick has replaced them, so the persistent-RDD count stays flat too.
+
+At scale: pending holds only failures and delays, and the dead table
+grows with dead letters only; delivery parallelism = input partitions;
+there is no shuffle outside the interpreter's widening exchange. For
+exactly-once bookkeeping the delivered/dead tables would be
+Delta/Iceberg appends keyed by (eventlog, offset) — plain parquet
+appends here since those jars aren't in the test image.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import logging
+from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
-from vanus_spark.delivery import route_failed_events, split_due_events
+from vanus_spark.delivery import retriable_col, route_failed_events, split_due_events
 from vanus_spark.model import ATTR_DELIVERY_TIME
 from vanus_spark.subscription import Subscription
+
+log = logging.getLogger(__name__)
 
 # sink: rows (list of dict) -> list of int status codes (2xx = success)
 SinkFn = Callable[[list[dict[str, Any]]], list[int]]
@@ -48,13 +64,46 @@ SinkFn = Callable[[list[dict[str, Any]]], list[int]]
 
 @dataclass
 class SinkResult:
+    """What one tick did. Every frame reads only the tick's own
+    checkpoints (transformed batch, send results, pending, dead), never
+    the input batch, so reading it again neither re-runs the
+    transformer nor re-sends an event. The frames returned by tick N
+    stay readable until tick N+1 starts; that tick releases the
+    checkpoints behind them once it has replaced them."""
+
     delivered: DataFrame
     pending: DataFrame
     dead: DataFrame
     # newly-parked retries this tick (None for control-plane-gated
-    # ticks) — consumed by run_stream's counter aggregate, mirroring
-    # the reference's TriggerRetryEventCounter
+    # ticks), mirroring the reference's TriggerRetryEventCounter
     retried: DataFrame | None = None
+    # rows pulled / delivered / newly dead / newly retried / pending
+    # after the tick, observed while the tick's frames materialized
+    counts: dict[str, int] = field(default_factory=dict)
+
+
+def _observe(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with aggregate ``metrics`` that the first action running
+    it collects as a side effect. Observe only the frame the action
+    runs on (or one it derives from alone): an observation completes
+    only for actions in the session it was registered in, and a
+    foreachBatch frame lives in a different session from the loop's
+    initial state."""
+    obs = Observation()
+    return df.observe(obs, *[c.alias(k) for k, c in metrics.items()]), obs
+
+
+def _checkpoint(df: DataFrame, held: list) -> DataFrame:
+    """Materialize ``df`` once (``localCheckpoint``: never recomputed)
+    and record the JVM RDD holding its blocks in ``held``."""
+    cp = df.localCheckpoint(eager=True)
+    held.append(cp._jdf.queryExecution().analyzed().rdd())
+    return cp
+
+
+def _release(held: list) -> None:
+    for rdd in held:
+        rdd.unpersist(False)
 
 
 _STATUS_SCHEMA_SUFFIX = ", status int, error string"
@@ -121,7 +170,8 @@ class DeliveryLoop:
         # from where delivery stopped.
         self.catalog = catalog
         self.catalog_sub_id = catalog_sub_id
-        self._epoch = 0
+        self._epoch = 0  # ticks run (durable loops: restored on restart)
+        self._held: list = []  # JVM RDDs behind the last tick's checkpoints
         self.empty_envelope = spark.createDataFrame(
             [],
             "id string, source string, specversion string, type string, "
@@ -167,15 +217,15 @@ class DeliveryLoop:
         ):
             self.dead = self.spark.read.parquet(dead_dir)
 
-    def _persist_state(self, new_dead: DataFrame) -> None:
-        self._epoch += 1
-        path = self._pending_dir(self._epoch)
-        self.pending.write.mode("overwrite").parquet(path)
-        self.pending = self.spark.read.parquet(path)
+    def _persist_state(self, pending: DataFrame, new_dead: DataFrame) -> None:
+        epoch = self._epoch + 1
+        path = self._pending_dir(epoch)
+        pending.write.mode("overwrite").parquet(path)
         new_dead.write.mode("append").parquet(f"{self.state_dir}/dead")
-        self.dead = self.spark.read.parquet(f"{self.state_dir}/dead")
         with open(f"{self.state_dir}/EPOCH", "w") as f:
-            f.write(str(self._epoch))
+            f.write(str(epoch))
+        self.pending = self.spark.read.parquet(path)
+        self.dead = self.spark.read.parquet(f"{self.state_dir}/dead")
 
     def _with_due_ts(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -187,7 +237,9 @@ class DeliveryLoop:
         self, batch_df: DataFrame, batch_time, tick_seconds: float = 1.0
     ) -> SinkResult:
         """One micro-batch tick; updates pending/dead state, returns
-        what happened (all DataFrames, lazily evaluated).
+        what happened. The tick runs the transformer once and the sink
+        once (see the module docstring); the returned frames read only
+        this tick's checkpoints.
 
         Backpressure/rate limiting are ENFORCED here, not passed
         through: ``config.max_uack`` (reference: offset/offset.go:29-63
@@ -205,10 +257,42 @@ class DeliveryLoop:
                     delivered=self.empty_envelope,
                     pending=self.pending,
                     dead=self.empty_envelope,
+                    counts={"pulled": 0, "delivered": 0, "dead": 0, "retry": 0,
+                            "pending": self.pending.count()},
                 )
-        # 1. transform: errors route to DLQ with TransformError
-        processed = self.sub.apply(batch_df)
-        fresh_ok = processed.where(~F.col("transform_error")).drop("transform_error")
+        held: list = []
+        try:
+            res = self._tick(batch_df, batch_time, tick_seconds, held)
+        except BaseException:
+            _release(held)
+            raise
+        # the previous tick's frames are replaced: free their blocks
+        _release(self._held)
+        self._held = held
+        self._epoch += 1
+        if log.isEnabledFor(logging.DEBUG):
+            log.debug(
+                "%s tick epoch=%d %s pending_partitions=%d", self.sub_id, self._epoch,
+                " ".join(f"{k}={v}" for k, v in res.counts.items()),
+                self.pending._jdf.rdd().getNumPartitions(),
+            )
+        return res
+
+    def _tick(self, batch_df, batch_time, tick_seconds, held: list) -> SinkResult:
+        width = self.spark.sparkContext.defaultParallelism
+        now = F.lit(batch_time).cast("timestamp")
+        rows = F.count(F.lit(1))
+
+        # 1. transform, materialized once: errors route to DLQ with
+        # TransformError. Pulled rows are counted before the filter.
+        batch_df, pulled = _observe(batch_df, pulled=rows)
+        processed, transformed = _observe(
+            self.sub.apply(batch_df), tf_dead=F.count_if("transform_error")
+        )
+        processed = _checkpoint(processed, held)
+        fresh = self._with_due_ts(
+            processed.where(~F.col("transform_error")).drop("transform_error")
+        )
         tf_failed = (
             processed.where(F.col("transform_error"))
             .drop("transform_error")
@@ -220,59 +304,72 @@ class DeliveryLoop:
         )
 
         # 2. delayed events in the fresh batch park in pending
-        fresh = self._with_due_ts(fresh_ok)
-        delayed = fresh.where(F.col("due_ts") > F.lit(batch_time).cast("timestamp"))
-        immediate = fresh.where(
-            F.col("due_ts").isNull() | (F.col("due_ts") <= F.lit(batch_time).cast("timestamp"))
-        )
+        delayed = fresh.where(F.col("due_ts") > now)
+        immediate = fresh.where(F.col("due_ts").isNull() | (F.col("due_ts") <= now))
 
         # 3. due pending events rejoin the stream
         due, still_pending = split_due_events(self.pending, batch_time)
-
         to_send = immediate.unionByName(due).drop("due_ts")
 
         # 3b. backpressure: cap what reaches the sender; overflow parks
         # (sort+limit is TakeOrdered — memory bounded by the cap, never
         # a full global sort)
         cap = self.sub.batch_cap(tick_seconds)
-        throttled = None
-        if cap is not None:
-            sendable = (
-                to_send.orderBy(F.col("time").asc_nulls_last(), "id").limit(cap)
-            )
-            throttled = to_send.join(
-                sendable.select("id"), "id", "left_anti"
-            ).withColumn("due_ts", F.lit(batch_time).cast("timestamp"))
-            to_send = sendable
-
-        # 4. deliver executor-side, split by status
-        sent = _deliver_with_sink(to_send, self.sink_fn).cache()
-        ok = sent.where((F.col("status") >= 200) & (F.col("status") < 300)).drop(
-            "status", "error"
+        sendable = (
+            to_send
+            if cap is None
+            else to_send.orderBy(F.col("time").asc_nulls_last(), "id").limit(cap)
         )
-        failed = sent.where((F.col("status") < 200) | (F.col("status") >= 300))
+
+        # 4. deliver executor-side, materialized once; split by status.
+        # Ordered mode: a failed send never retries — straight to DLQ
+        # with reason OrderEvent (reference: trigger.go:427-434)
+        is_ok = (F.col("status") >= 200) & (F.col("status") < 300)
+        retriable = ~is_ok & (
+            F.lit(False) if self.sub.ordered else retriable_col(self.sub.max_retry_attempts)
+        )
+        sent, sends = _observe(
+            _deliver_with_sink(sendable, self.sink_fn),
+            delivered=F.count_if(is_ok),
+            retry=F.count_if(retriable),
+            send_dead=F.count_if(~is_ok & ~retriable),
+        )
+        sent = _checkpoint(sent, held)
+        ok = sent.where(is_ok).drop("status", "error")
+        failed = sent.where(~is_ok)
         if self.sub.ordered:
-            # ordered mode: a failed send never retries — straight to
-            # DLQ with reason OrderEvent (reference: trigger.go:427-434)
             failed = failed.withColumn("status", F.lit(-1))
         retry, dead = route_failed_events(
             failed, self.sub_id, batch_time, self.sub.max_retry_attempts
         )
-
-        # 5. state: retries re-enter pending with their backoff due_ts
-        self.pending = still_pending.unionByName(
-            self._with_due_ts(retry)
-        ).unionByName(delayed)
-        if throttled is not None:
-            self.pending = self.pending.unionByName(throttled)
         new_dead = dead.unionByName(tf_dead)
+
+        # 5. state: retries re-enter pending with their backoff due_ts,
+        # throttled overflow is due at once; both tables stay at most
+        # defaultParallelism wide
+        pending = still_pending.unionByName(self._with_due_ts(retry)).unionByName(delayed)
+        if cap is not None:
+            throttled = to_send.join(sent.select("id"), "id", "left_anti")
+            pending = pending.unionByName(throttled.withColumn("due_ts", now))
+        pending, parked = _observe(pending.coalesce(width), pending=rows)
         if self.state_dir:
-            self._persist_state(new_dead)
+            self._persist_state(pending, new_dead.coalesce(width))
         else:
-            self.pending = self.pending.localCheckpoint(eager=True)
-            self.dead = self.dead.unionByName(new_dead).localCheckpoint(eager=True)
+            # assigned together: a tick that fails keeps the previous state
+            self.pending, self.dead = (
+                _checkpoint(pending, held),
+                _checkpoint(self.dead.unionByName(new_dead).coalesce(width), held),
+            )
+        t, s = transformed.get, sends.get
+        counts = {
+            "pulled": pulled.get["pulled"],
+            "delivered": s["delivered"],
+            "dead": t["tf_dead"] + s["send_dead"],
+            "retry": s["retry"],
+            "pending": parked.get["pending"],
+        }
         return SinkResult(
-            delivered=ok, pending=self.pending, dead=new_dead, retried=retry
+            delivered=ok, pending=self.pending, dead=new_dead, retried=retry, counts=counts
         )
 
     # ----- Structured Streaming wiring -------------------------------------
@@ -347,40 +444,20 @@ class DeliveryLoop:
             res = self.process_batch(
                 batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
             )
-            # force delivery + expose progress in ONE tagged-union job
-            # (the reference's TriggerDeliveryEventCounter surface:
-            # delivered / newly-dead / parked per tick)
-            tag_union = (
-                batch_df.select(F.lit("pulled").alias("k"))
-                .unionByName(res.delivered.select(F.lit("delivered").alias("k")))
-                .unionByName(res.dead.select(F.lit("dead").alias("k")))
-                .unionByName(res.pending.select(F.lit("pending").alias("k")))
-            )
-            if res.retried is not None:
-                tag_union = tag_union.unionByName(
-                    res.retried.select(F.lit("retry").alias("k"))
-                )
-            counts = {
-                r["k"]: r["n"]
-                for r in tag_union.groupBy("k")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            self.delivered_count += counts.get("delivered", 0)
-            self.prom_counters["pull_event_number"] += counts.get("pulled", 0)
-            self.prom_counters["push_event_number"] += counts.get(
-                "delivered", 0
-            )
-            self.prom_counters["retry_event_number"] += counts.get("retry", 0)
-            self.prom_counters["dead_letter_event_number"] += counts.get(
-                "dead", 0
-            )
+            # the reference's TriggerDeliveryEventCounter surface:
+            # delivered / newly-dead / parked per tick
+            counts = res.counts
+            self.delivered_count += counts["delivered"]
+            self.prom_counters["pull_event_number"] += counts["pulled"]
+            self.prom_counters["push_event_number"] += counts["delivered"]
+            self.prom_counters["retry_event_number"] += counts["retry"]
+            self.prom_counters["dead_letter_event_number"] += counts["dead"]
             self.metrics.append(
                 {
                     "epoch": int(epoch_id),
-                    "delivered": counts.get("delivered", 0),
-                    "new_dead": counts.get("dead", 0),
-                    "pending": counts.get("pending", 0),
+                    "delivered": counts["delivered"],
+                    "new_dead": counts["dead"],
+                    "pending": counts["pending"],
                 }
             )
 

@@ -13,6 +13,7 @@ foreachBatch streaming plan share this code path.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -20,6 +21,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from vanus_spark.filters import compile_filter
 from vanus_spark.transformer import Transformer, transform_dataframe
+
+log = logging.getLogger(__name__)
 
 DEFAULT_MAX_RETRY_ATTEMPTS = 32  # reference: pkg/constants.go:32
 
@@ -90,8 +93,8 @@ class Subscription:
         the static subset, it compiles to a pure Column plan
         (plans/compiler.py compile_transformer) — whole-stage codegen,
         no Python at eval time; otherwise the Arrow-batched
-        interpreter runs. Both paths are exact (the equivalence is
-        test-gated)."""
+        interpreter runs, and the fallback reason is logged at INFO.
+        Both paths are exact (the equivalence is test-gated)."""
         out = envelope_df.where(compile_filter(self.filters))
         tf = self.transformer or {}
         if data_schema is not None and (
@@ -101,8 +104,8 @@ class Subscription:
 
             try:
                 return compile_transformer(tf, data_schema)(out)
-            except CompileFallback:
-                pass  # dynamic transformer -> interpreter
+            except CompileFallback as e:
+                log.info("transformer runs on the interpreter: %s", e)
         return transform_dataframe(out, self.transformer)
 
     def dry_run(self, envelope_df: DataFrame) -> DataFrame:
