@@ -1,6 +1,8 @@
 """Equivalence gate: compile_transformer (pure-Column path) must match
 the mapInPandas interpreter byte-for-byte on every in-subset spec —
-define vars, pipelines, text/JSON templates, malformed payloads.
+define vars, pipelines, text/JSON templates, nil and malformed
+payloads. Payloads that parse but do not fit the data schema are the
+documented exception (test_schema_misfit_payload_contract).
 
 Reference semantics under test: transformer.go:67-106 execution order,
 define.go:30-76 nil-on-error vars, template.go datacontenttype
@@ -94,6 +96,11 @@ SPECS = {
     "json_template_dict_form": {
         "template": {"type": "json", "template": '{"t":"<type>","v":<$.data.value>}'},
     },
+    # template only; a slot for a field outside the schema renders null
+    "json_template_missing_field": {
+        "template": '{"uid":<$.data.user_id>,"t":"<type>","v":<$.data.value>,'
+                    '"none":<$.data.nope>}',
+    },
     "skip_family": {
         "pipeline": [
             ["CHECK_CUSTOM_VALUES", "$.data.nope2", "x", "$.data.flag", "yes", "no"],
@@ -113,6 +120,27 @@ def test_compiled_matches_interpreter(spark, spec_name):
     interp = sorted(transform_dataframe(df, spec).select(*cols).collect())
     comp = sorted(compile_transformer(spec, DATA_SCHEMA)(df).select(*cols).collect())
     assert comp == interp
+
+
+def test_schema_misfit_payload_contract(spark):
+    """The one place the paths part: a payload that parses as JSON but
+    does not fit the data schema is flagged transform_error (DLQ) by
+    the compiled path, with the payload passed through untouched; the
+    interpreter transforms it."""
+    misfits = ['{"user_id":1,"value":"abc"}', "[1,2]"]
+    df = spark.createDataFrame(
+        [(str(i), "/s", "1.0", "t", None, None, None, None, {}, d)
+         for i, d in enumerate(misfits)],
+        ENV_SCHEMA,
+    )
+    spec = {"pipeline": [["MATH_MUL", "$.data.value", "$.data.value", 100]]}
+    cols = ["data", "transform_error"]
+    comp = sorted(compile_transformer(spec, DATA_SCHEMA)(df).select(*cols).collect())
+    interp = sorted(transform_dataframe(df, spec).select(*cols).collect())
+    assert [tuple(r) for r in comp] == [(d, True) for d in sorted(misfits)]
+    assert [tuple(r) for r in interp] == [
+        ("[1,2]", False), ('{"user_id":1,"value":"abc"}', False)
+    ]
 
 
 def test_fallback_on_dynamic_path():

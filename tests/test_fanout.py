@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+from vanus_spark.observability import trigger_counter_rows
 from vanus_spark.streaming.fanout import TriggerWorker, fanout_apply
 
 T0 = dt.datetime(2024, 6, 1, 12, 0, 0)
@@ -89,7 +90,8 @@ def test_worker_shared_batch_independent_state(spark):
 
 def test_worker_run_stream_one_scan_all_subs(spark, tmp_path):
     """End-to-end: one streaming scan fans out to two subscriptions
-    with different filters; per-sub delivered counts are right."""
+    with different filters; per-sub delivered counts, the reference's
+    trigger counters and the per-tick metrics rows are right."""
     src = tmp_path / "bus"
     _envelope(
         spark, [_row(i, "purchase" if i % 2 else "click") for i in range(10)]
@@ -101,6 +103,20 @@ def test_worker_run_stream_one_scan_all_subs(spark, tmp_path):
     w = TriggerWorker(spark)
     w.register("p", {"filters": [{"exact": {"type": "purchase"}}]}, Recorder())
     w.register("c", {"filters": [{"exact": {"type": "click"}}]}, Recorder())
-    q = w.run_stream(stream, str(tmp_path / "ckpt"))
+    ticks = []
+    q = w.run_stream(stream, str(tmp_path / "ckpt"), on_tick=ticks.append)
     q.awaitTermination(120)
     assert w.delivered_counts() == {"c": 5, "p": 5}
+    for sub_id, loop in w.loops.items():
+        counters = {
+            r["metric"].removeprefix("vanus_trigger_worker_"): r["value"]
+            for r in trigger_counter_rows(loop)
+        }
+        assert counters == {
+            "pull_event_number": 10,
+            "push_event_number": 5,
+            "retry_event_number": 0,
+            "dead_letter_event_number": 0,
+        }, sub_id
+        assert len(loop.metrics) == len(ticks) >= 1
+        assert sum(m["delivered"] for m in loop.metrics) == 5

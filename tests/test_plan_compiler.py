@@ -1,29 +1,50 @@
-"""Compiled pipeline vs interpreter equivalence (the two execution
-paths must agree on the wire)."""
+"""Compiled transformer vs interpreter equivalence for action
+pipelines (the two execution paths must agree on the wire, transform
+error flag included)."""
 
 from __future__ import annotations
 
 import json
+from functools import reduce
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from vanus_spark.plans import CompileFallback, compile_pipeline
+from vanus_spark.plans import CompileFallback, compile_transformer
 from vanus_spark.subscription import Subscription
 from vanus_spark.transformer import transform_dataframe
 
 DATA_SCHEMA = "user_id long, value double, props struct<k: int>"
+# nil payloads (NULL, blank, JSON null) run the compiled nil-branch
+# chain; "{bad" is malformed -> transform_error on both paths
+NIL_AND_MALFORMED = [None, "", "null", "{bad"]
 
 
 def _parse(rows):
-    return {r.id: json.loads(r.data) for r in rows}
+    def load(data):
+        try:
+            return json.loads(data)
+        except (TypeError, ValueError):
+            return data
+
+    return {r.id: (load(r.data), r.transform_error) for r in rows}
+
+
+def _run_both(df, pipeline, schema):
+    spec = {"pipeline": pipeline}
+    compiled = compile_transformer(spec, schema)(df)
+    interp = transform_dataframe(df, spec)
+    return _parse(compiled.collect()), _parse(interp.collect())
 
 
 def both_paths(cloudevents, pipeline):
     df = cloudevents.limit(300)
-    compiled = compile_pipeline(pipeline, DATA_SCHEMA)(df)
-    interp = transform_dataframe(df, {"pipeline": pipeline})
-    return _parse(compiled.collect()), _parse(interp.collect())
+    one = cloudevents.limit(1)
+    extra = [
+        one.withColumn("id", F.lit(f"nil{i}")).withColumn("data", F.lit(d).cast("string"))
+        for i, d in enumerate(NIL_AND_MALFORMED)
+    ]
+    return _run_both(reduce(DataFrame.unionByName, extra, df), pipeline, DATA_SCHEMA)
 
 
 @pytest.mark.parametrize(
@@ -93,9 +114,11 @@ def test_compiled_matches_interpreter(cloudevents, pipeline):
 
 def test_fallback_on_dynamic_paths(cloudevents):
     with pytest.raises(CompileFallback):
-        compile_pipeline([["UNFOLD_ARRAY", "$.data.arr", "$.data.item"]], DATA_SCHEMA)
+        compile_transformer(
+            {"pipeline": [["UNFOLD_ARRAY", "$.data.arr", "$.data.item"]]}, DATA_SCHEMA
+        )
     with pytest.raises(CompileFallback):
-        compile_pipeline([["CREATE", "$.data.a[0]", 1]], DATA_SCHEMA)
+        compile_transformer({"pipeline": [["CREATE", "$.data.a[0]", 1]]}, DATA_SCHEMA)
 
 
 def test_subscription_uses_compiled_path(cloudevents):
@@ -166,22 +189,23 @@ def test_array_foreach_compiles_with_abort_prefix(spark):
         "subject string, attributes map<string,string>, data string",
     )
     pipeline = [["ARRAY_FOREACH", "$.data.items", ["UPPER_CASE", "$.data.name"]]]
-    compiled = compile_pipeline(pipeline, schema)(df)
-    interp = transform_dataframe(df, {"pipeline": pipeline})
-    c, i = _parse(compiled.collect()), _parse(interp.collect())
+    c, i = _run_both(df, pipeline, schema)
     assert c == i
-    assert c["1"]["items"][0]["name"] == "AB"
-    assert c["2"]["items"][0]["name"] == "X"      # before the abort: mutated
-    assert "name" not in c["2"]["items"][1]       # the failing element
-    assert c["2"]["items"][2]["name"] == "z"      # after the abort: untouched
+    assert c["1"] == ({"items": [{"name": "AB", "n": 1}, {"name": "CD", "n": 2}]}, False)
+    items = c["2"][0]["items"]
+    assert items[0]["name"] == "X"      # before the abort: mutated
+    assert "name" not in items[1]       # the failing element
+    assert items[2]["name"] == "z"      # after the abort: untouched
 
 
 def test_array_foreach_falls_back_outside_subset(cloudevents):
     """Nested non-string ops / multiple nested commands stay on the
     interpreter path."""
     with pytest.raises(CompileFallback):
-        compile_pipeline(
-            [["ARRAY_FOREACH", "$.data.items", ["MATH_ADD", "$.data.n", "$.data.n", 1]]],
+        compile_transformer(
+            {"pipeline": [
+                ["ARRAY_FOREACH", "$.data.items", ["MATH_ADD", "$.data.n", "$.data.n", 1]]
+            ]},
             "items array<struct<name: string, n: long>>",
         )
 
@@ -205,20 +229,17 @@ def test_render_array_compiles(spark):
         "subject string, attributes map<string,string>, data string",
     )
     pipeline = [["RENDER_ARRAY", "$.data.tags", "$.data.users", "u=<@.name>#<@.n>;"]]
-    compiled = compile_pipeline(pipeline, schema)(df)
-    interp = transform_dataframe(df, {"pipeline": pipeline})
-    c, i = _parse(compiled.collect()), _parse(interp.collect())
+    c, i = _run_both(df, pipeline, schema)
     assert c == i
-    assert c["1"]["tags"] == ["u=ann#1;", "u=bob#2;"]
-    assert "tags" not in c["2"]
-    assert "tags" not in c["3"]  # empty array: wildcard read errors -> skip
+    assert c["1"][0]["tags"] == ["u=ann#1;", "u=bob#2;"]
+    assert "tags" not in c["2"][0]
+    assert "tags" not in c["3"][0]  # empty array: wildcard read errors -> skip
 
     # no placeholders: unconditional single-element render
     pipeline2 = [["RENDER_ARRAY", "$.data.tags", "$.data.users", "static"]]
-    c2 = _parse(compile_pipeline(pipeline2, schema)(df).collect())
-    i2 = _parse(transform_dataframe(df, {"pipeline": pipeline2}).collect())
+    c2, i2 = _run_both(df, pipeline2, schema)
     assert c2 == i2
-    assert c2["1"]["tags"] == ["static"]
+    assert c2["1"][0]["tags"] == ["static"]
 
 
 def test_register_column_action_compiles(cloudevents):
@@ -247,4 +268,4 @@ def test_register_column_action_compiles(cloudevents):
     pipeline = [["CREATE", "$.data.s", "hey"], ["SHOUT", "$.data.s"]]
     compiled, interp = both_paths(cloudevents, pipeline)
     assert compiled == interp
-    assert all(v["s"] == "HEY!" for v in compiled.values())
+    assert all(d["s"] == "HEY!" for d, err in compiled.values() if not err)

@@ -88,20 +88,6 @@ def test_transform_dataframe_template(spark, cloudevents):
     assert rows[0].datacontenttype == "application/json"
 
 
-def test_compile_json_template_matches_interpreter(spark, cloudevents):
-    from vanus_spark.templates import compile_json_template
-
-    tmpl = '{"uid":<$.data.user_id>,"t":"<type>","v":<$.data.value>,"none":<$.data.nope>}'
-    schema = "user_id long, value double, nope string"
-    col = compile_json_template(tmpl, schema)
-    rows = cloudevents.limit(50).select("id", "type", "data", col.alias("r")).collect()
-    tf = Transformer({"template": tmpl})
-    for r in rows:
-        _, expected, err = tf.execute_event({"id": r.id, "type": r.type}, r.data)
-        assert not err
-        assert json.loads(r.r) == json.loads(expected)
-
-
 def test_compile_text_template_column(spark, cloudevents):
     col = compile_text_template("uid=<$.data.user_id>:<type>")
     rows = cloudevents.limit(3).select(col.alias("t"), "type", "data").collect()

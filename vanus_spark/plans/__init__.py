@@ -1,5 +1,1 @@
-from vanus_spark.plans.compiler import (  # noqa: F401
-    CompileFallback,
-    compile_pipeline,
-    compile_transformer,
-)
+from vanus_spark.plans.compiler import CompileFallback, compile_transformer  # noqa: F401

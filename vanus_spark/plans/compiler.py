@@ -1,11 +1,19 @@
-"""Static-pipeline compiler: transformer pipeline -> pure Column plan.
+"""Static transformer compiler: define + pipeline + template -> pure
+Column plan (``compile_transformer``).
 
 When the subscription declares a payload schema and every action
-addresses static ``$.data.x[.y]`` paths, the whole pipeline compiles
+addresses static ``$.data.x[.y]`` paths, the whole transformer compiles
 to ONE ``select`` over a struct-typed data column — whole-stage
 codegen, no Python at eval time. Anything outside the compilable
 subset raises ``CompileFallback`` and the caller uses the interpreter
-(transformer.py), which is always exact.
+(transformer.py).
+
+Contract with the interpreter: the two paths agree on payloads that
+conform to the data schema and on nil (NULL, blank, ``null``) or
+malformed ones. They disagree on a payload that parses as JSON but does
+not fit the schema (``{"value":"abc"}`` for ``value double``, a
+top-level array): the compiled path flags it ``transform_error`` (DLQ),
+the interpreter transforms it.
 
 Semantics preserved from the reference:
 - skip-on-error: an action whose computation NULLs out (bad cast,
@@ -26,10 +34,10 @@ CONDITION_IF, LENGTH, DATE_FORMAT, UNIX_TIME_FORMAT,
 CONVERT_TIMEZONE, SPLIT_WITH_DELIMITER, SPLIT_FROM_START,
 SPLIT_BETWEEN_POSITIONS, SPLIT_WITH_INTERVALS, JOIN (array<string>
 sources), EXTRACT_BETWEEN_DELIMITERS, EXTRACT_BETWEEN_POSITIONS,
-CHECK_CUSTOM_VALUES, EXTRACT_MISSING. Still interpreter-only:
-UNFOLD_ARRAY (data-dependent keys), ARRAY_FOREACH / RENDER_ARRAY
-(nested dynamic addressing), DEBEZIUM sink conversion, dynamic
-``[*]`` paths.
+CHECK_CUSTOM_VALUES, EXTRACT_MISSING, RENDER_ARRAY and ARRAY_FOREACH
+with one nested string op (over a schema ``array<struct>``). Still
+interpreter-only: UNFOLD_ARRAY (data-dependent keys), other
+ARRAY_FOREACH bodies, DEBEZIUM sink conversion, dynamic ``[*]`` paths.
 """
 
 from __future__ import annotations
@@ -343,58 +351,6 @@ def _skip_on_null(state: _State, path: str, new: Column) -> Column:
     if state.known(path):
         return F.coalesce(new, state.get(path))
     return new
-
-
-def compile_pipeline(
-    pipeline: list[list[Any]], data_schema: T.StructType | str
-) -> Callable[[DataFrame], DataFrame]:
-    """Returns df -> df with ``data`` (JSON string) rewritten by the
-    compiled pipeline. Raises CompileFallback when not compilable."""
-    schema = (
-        T._parse_datatype_string(data_schema)  # noqa: SLF001
-        if isinstance(data_schema, str)
-        else data_schema
-    )
-    if not isinstance(schema, T.StructType):
-        raise CompileFallback("data schema must be a struct")
-
-    def apply(df: DataFrame) -> DataFrame:
-        # Two-step select: the parsed struct becomes a REAL column, so
-        # the (non-cheap) from_json runs once per row no matter how
-        # many actions read it — CollapseProject refuses to inline
-        # multiply-referenced non-cheap exprs (SPARK-36718), which both
-        # bounds the codegen'd plan size (compile time) and the
-        # per-row parse count.
-        staged = df.withColumn("__vs_parsed", F.from_json(F.col("data"), schema))
-        state = _State(F.col("__vs_parsed"), schema)
-        state_nil = _State(_null_struct(schema), schema, root_materialize=True)
-        for cmd in pipeline:
-            for st in (state, state_nil):
-                try:
-                    _compile_action(st, cmd)
-                except _UnknownRead:
-                    continue  # action can never succeed -> statically skipped
-        # rows whose payload didn't parse to an object take the
-        # nil-branch chain (constant-folded all-null seed): writes
-        # into a nil payload create the object, py_set-style
-        js_nil = F.to_json(state_nil.data)
-        out = F.when(
-            F.col("__vs_parsed").isNotNull(), F.to_json(state.data)
-        ).otherwise(
-            F.when(
-                F.coalesce(js_nil == "{}", F.lit(True)), F.lit("null")
-            ).otherwise(js_nil)
-        )
-        return staged.withColumn("data", out).drop("__vs_parsed")
-
-    # dry-compile against an empty state to surface fallbacks eagerly
-    probe = _State(F.from_json(F.lit("{}"), schema), schema)
-    for cmd in pipeline:
-        try:
-            _compile_action(probe, cmd)
-        except _UnknownRead:
-            continue
-    return apply
 
 
 # ---------------------------------------------------------------------------
@@ -897,7 +853,7 @@ def compile_transformer(
     and output template — to pure Columns (reference semantics:
     server/trigger/transform/transformer.go:67-106).
 
-    Semantics preserved beyond compile_pipeline:
+    Semantics preserved:
     - define vars evaluate against the ORIGINAL event (define.go:30-76);
       evaluation errors leave the var nil;
     - template renders against the MUTATED data + original attributes,
@@ -918,19 +874,13 @@ def compile_transformer(
     from vanus_spark.templates import (
         compile_json_template_generic,
         parse_text_template,
-        sniff_template_type,
+        template_of,
     )
 
     spec = spec or {}
     define_spec = spec.get("define") or {}
     pipeline = spec.get("pipeline") or []
-    tmpl = spec.get("template")
-    if isinstance(tmpl, dict):
-        template = tmpl.get("template")
-        ttype = tmpl.get("type") or sniff_template_type(template or "")
-    else:
-        template = tmpl
-        ttype = sniff_template_type(tmpl) if tmpl else None
+    template, ttype = template_of(spec.get("template"))
 
     schema = (
         T._parse_datatype_string(data_schema)  # noqa: SLF001

@@ -186,7 +186,7 @@ class DeliveryLoop:
         self.metrics: list[dict] = []
         # Prometheus-shaped counters (reference pkg/observability/
         # metrics/trigger.go): monotonic totals accumulated per tick by
-        # run_stream, exported with the reference's metric names via
+        # record_tick, exported with the reference's metric names via
         # vanus_spark.observability. Kept separate from self.metrics so
         # the metrics_df schema (a query surface) stays frozen.
         self.prom_counters: dict[str, int] = {
@@ -381,6 +381,25 @@ class DeliveryLoop:
         schema = "epoch long, delivered long, new_dead long, pending long"
         return self.spark.createDataFrame(self.metrics, schema)
 
+    def record_tick(self, epoch_id: int, counts: dict[str, int]) -> None:
+        """Fold one tick's ``SinkResult.counts`` into the running totals:
+        the reference's TriggerDeliveryEventCounter surface
+        (``prom_counters``) and one ``metrics`` row (delivered /
+        newly-dead / parked)."""
+        self.delivered_count += counts["delivered"]
+        self.prom_counters["pull_event_number"] += counts["pulled"]
+        self.prom_counters["push_event_number"] += counts["delivered"]
+        self.prom_counters["retry_event_number"] += counts["retry"]
+        self.prom_counters["dead_letter_event_number"] += counts["dead"]
+        self.metrics.append(
+            {
+                "epoch": int(epoch_id),
+                "delivered": counts["delivered"],
+                "new_dead": counts["dead"],
+                "pending": counts["pending"],
+            }
+        )
+
     _HEARTBEAT_ID = "__heartbeat__"
 
     def _heartbeat_stream(self) -> DataFrame:
@@ -444,22 +463,7 @@ class DeliveryLoop:
             res = self.process_batch(
                 batch_df, _dt.datetime.now(_dt.timezone.utc), tick_seconds
             )
-            # the reference's TriggerDeliveryEventCounter surface:
-            # delivered / newly-dead / parked per tick
-            counts = res.counts
-            self.delivered_count += counts["delivered"]
-            self.prom_counters["pull_event_number"] += counts["pulled"]
-            self.prom_counters["push_event_number"] += counts["delivered"]
-            self.prom_counters["retry_event_number"] += counts["retry"]
-            self.prom_counters["dead_letter_event_number"] += counts["dead"]
-            self.metrics.append(
-                {
-                    "epoch": int(epoch_id),
-                    "delivered": counts["delivered"],
-                    "new_dead": counts["dead"],
-                    "pending": counts["pending"],
-                }
-            )
+            self.record_tick(epoch_id, res.counts)
 
         return (
             stream_df.writeStream.foreachBatch(on_batch)

@@ -94,7 +94,11 @@ class Subscription:
         (plans/compiler.py compile_transformer) — whole-stage codegen,
         no Python at eval time; otherwise the Arrow-batched
         interpreter runs, and the fallback reason is logged at INFO.
-        Both paths are exact (the equivalence is test-gated)."""
+        The two paths agree (test-gated) on payloads that conform to
+        ``data_schema`` and on nil or malformed ones; a payload that
+        parses as JSON but does not fit the schema is flagged
+        ``transform_error`` (DLQ) by the compiled path and transformed
+        by the interpreter."""
         out = envelope_df.where(compile_filter(self.filters))
         tf = self.transformer or {}
         if data_schema is not None and (

@@ -41,6 +41,16 @@ def sniff_template_type(text: str) -> str:
     return "text"
 
 
+def template_of(tmpl: Any) -> tuple[str | None, str | None]:
+    """(text, type) of a transformer spec's ``template`` entry: either
+    the bare template string or ``{type: text|json, template: ...}``;
+    an unset type is sniffed. (None, None) when there is no template."""
+    if isinstance(tmpl, dict):
+        text = tmpl.get("template")
+        return text, tmpl.get("type") or sniff_template_type(text or "")
+    return tmpl, sniff_template_type(tmpl) if tmpl else None
+
+
 # ---------------------------------------------------------------------------
 # Parsing (shared segment model)
 # ---------------------------------------------------------------------------
@@ -192,13 +202,12 @@ def _json_string_fragment(v: Column) -> Column:
     return F.when(v.isNull(), F.lit("")).otherwise(enc)
 
 
-def compile_json_template_generic(template: str, resolve, resolve_str=None) -> Column:
+def compile_json_template_generic(template: str, resolve, resolve_str) -> Column:
     """JSON template -> concat() of literal fragments and placeholder
-    Columns. ``resolve(inner)`` returns the TYPED Column for a
-    placeholder (bare position: JSON-encoded via to_json; in-string
-    position: stringified then JSON-escaped). ``resolve_str(inner)``,
-    when given, overrides the in-string stringification (used by the
-    transformer compiler for Go-style float formatting)."""
+    Columns. ``resolve(inner)`` returns the TYPED Column for a bare
+    placeholder (JSON-encoded via to_json); ``resolve_str(inner)`` the
+    string form for an in-string one (JSON-escaped; the transformer
+    compiler passes Go-style float formatting)."""
     parts: list[Column] = []
     buf: list[str] = []
     in_string = False
@@ -222,11 +231,7 @@ def compile_json_template_generic(template: str, resolve, resolve_str=None) -> C
                 flush()
                 inner = m.group(1)
                 if in_string:
-                    s = resolve_str(inner) if resolve_str else resolve(inner).cast("string")
-                    enc = F.regexp_extract(
-                        F.to_json(F.struct(s.alias("x"))), '^\\{"x":"(.*)"\\}$', 1
-                    )
-                    parts.append(F.when(s.isNull(), F.lit("")).otherwise(enc))
+                    parts.append(_json_string_fragment(resolve_str(inner)))
                 else:
                     parts.append(_json_encode_col(resolve(inner)))
                 i = m.end()
@@ -235,42 +240,6 @@ def compile_json_template_generic(template: str, resolve, resolve_str=None) -> C
         i += 1
     flush()
     return F.concat(*parts) if parts else F.lit("")
-
-
-def compile_json_template(
-    template: str, data_schema, data_col: str = "data"
-) -> Column:
-    """Static JSON template -> concat() of JSON fragments and
-    JSON-encoded placeholder values — the JVM fast path of
-    render_json.
-
-    Needs the payload schema: data paths resolve through
-    ``from_json`` so values keep their JSON types (get_json_object
-    alone can't distinguish the number 87 from the string "87")."""
-    from pyspark.sql import types as T
-
-    from vanus_spark.model import attribute_column
-
-    schema = (
-        T._parse_datatype_string(data_schema)  # noqa: SLF001
-        if isinstance(data_schema, str)
-        else data_schema
-    )
-    parsed = F.from_json(F.col(data_col), schema)
-
-    def resolve(inner: str) -> Column:
-        if inner == "$.data":
-            return parsed
-        if inner.startswith("$.data."):
-            c = parsed
-            for part in inner[7:].split("."):
-                c = c.getField(part)
-            return c
-        if inner.startswith("$."):
-            return attribute_column(inner[2:]).cast("string")
-        return attribute_column(inner).cast("string")
-
-    return compile_json_template_generic(template, resolve)
 
 
 def compile_text_template(text: str, data_col: str = "data") -> Column:

@@ -10,8 +10,8 @@ or re-serialize the mutated data.
 Spark integration: the whole transformer runs as ONE ``mapInPandas``
 over the envelope DataFrame — Arrow-batched, partition-parallel, no
 driver involvement; the per-row Python interpreter is the price of
-schemaless JSON mutation (static pipelines should use
-plans/compiler.py instead, which stays JVM-side).
+schemaless JSON mutation (static transformers should use
+plans/compiler.py compile_transformer instead, which stays JVM-side).
 
 Output adds a ``transform_error`` boolean column — the route-split
 marker for the DLQ path (reference: trigger.go:285-297).
@@ -38,13 +38,8 @@ from vanus_spark.templates import (
     parse_text_template,
     render_json,
     render_text,
-    sniff_template_type,
+    template_of,
 )
-
-_ENVELOPE_COLS = [
-    "id", "source", "specversion", "type", "time", "datacontenttype",
-    "dataschema", "subject", "attributes", "data",
-]
 
 TRANSFORM_OUTPUT_SCHEMA = (
     "id string, source string, specversion string, type string, "
@@ -71,13 +66,7 @@ class Transformer:
                 self.actions.append(build_action(cmd))
             except Exception as e:  # noqa: BLE001
                 self.parse_errors.append(f"{cmd!r}: {e}")
-        tmpl = spec.get("template")
-        if isinstance(tmpl, dict):  # {type: text|json, template: "..."}
-            self.template = tmpl.get("template")
-            self.template_type = tmpl.get("type") or sniff_template_type(self.template)
-        else:
-            self.template = tmpl
-            self.template_type = sniff_template_type(tmpl) if tmpl else None
+        self.template, self.template_type = template_of(spec.get("template"))
         self.text_segments = (
             parse_text_template(self.template) if self.template_type == "text" else None
         )
